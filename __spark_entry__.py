@@ -71,7 +71,7 @@ def _q_neardup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ngram_jaccard_pairs` output, so the oracle (exact pairwise
     Jaccard + recursive-CTE transitive closure in DuckDB) witnesses
     the ENTIRE cluster-assignment path: shingling → distributed
-    shingle-join pair generation → pointer-doubling CC → singleton
+    shingle-join pair generation → connected components → singleton
     labeling. cluster_id = min doc_id in the component on both sides
     (`operators/connected_components.py` min-label contract)."""
     from datasketches_rust_spark.operators.dedup import DedupConfig, assign_clusters
@@ -113,8 +113,8 @@ def _q_dedup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         # law — the signature stage under every near-dup query here
         F.lit(g["minhash_kernel_ok"]).alias("minhash_kernel_ok"),
         F.lit(g["minhash_merge_ok"]).alias("minhash_merge_ok"),
-        # round-5 folded gate: the DISTRIBUTED pointer-jump CC loop
-        # (forced past the edge gate on a multi-round graph) matches
+        # round-5 folded gate: the DISTRIBUTED CC contraction rounds
+        # (forced past the edge gate on a multi-round graph) match
         # the driver path and the closed-form components — the 10^12
         # path is now driver-visible, not just pytest/tool-visible
         # (operators/connected_components.py::distributed_loop_selfcheck)

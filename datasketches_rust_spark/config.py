@@ -127,21 +127,26 @@ class DedupConfig:
     # O(m²) clique (operators/lsh.py); 256 caps the per-bucket pair
     # array at ~32k structs
     max_bucket_size: int = 256
-    # connected components
+    # connected components: cap on the contraction rounds before the
+    # one-task finish (operators/connected_components.py); exceeding it
+    # raises instead of returning a partial labeling
     max_cc_iterations: int = 50
     # Sandbox-scale shortcuts that trade PARALLEL work for LEVEL-
     # INDEPENDENT serial driver time: edge sets at or below
-    # cc_driver_max_edges solve CC driver-side, and the multimodal
-    # verification broadcasts its narrow (id, phash, pixel) side when
-    # the row count is at or below broadcast_verify_max_rows. Both pay
-    # at small scale (driver CC measured 2.2x faster at 200k images)
-    # and neither engages at 10^12 rows — but near the thresholds
-    # (~1M rows / ~2M edges on 2-8 cores) their serial cost is the
-    # dominant fixed term in a two-cluster-size scaling measurement
-    # (BASELINE.md round-5 ship-vehicle section: f grew 8 s -> ~91 s
-    # from 300k to 1M rows). Set both to 0 for the at-scale plan
-    # (shuffle-join verify + distributed CC), e.g. via run_dedup.py
-    # --at-scale-plan.
+    # cc_driver_max_edges are collected and solved on the driver, and
+    # the multimodal verification broadcasts its narrow (id, phash,
+    # pixel) side when the row count is at or below
+    # broadcast_verify_max_rows (a count job runs only when the gate is
+    # non-zero). Both pay at small scale (driver CC measured 2.2x faster
+    # at 200k images) and neither engages at 10^12 rows — but near the
+    # thresholds (~1M rows / ~2M edges on 2-8 cores) their serial cost
+    # is the dominant fixed term in a two-cluster-size scaling
+    # measurement (BASELINE.md round-5 ship-vehicle section: f grew
+    # 8 s -> ~91 s from 300k to 1M rows). Set both to 0 for the
+    # at-scale plan (shuffle-join verify + distributed CC), e.g. via
+    # run_dedup.py --at-scale-plan. Distributed CC solves an edge set
+    # that fits one advisory partition in a single task, and contracts
+    # a larger one round by round until it does.
     cc_driver_max_edges: int = 2_000_000
     broadcast_verify_max_rows: int = 2_000_000
 

@@ -5,13 +5,12 @@ pairs → signature-Jaccard verification → connected components →
 ``(id, cluster_id)``. Every row of the input appears in the output;
 non-duplicates form singleton clusters labeled by their own id.
 
-``near_dup_image_clusters``: phash/SimHash Hamming-LSH over image
-signatures, same downstream topology.
-
-``near_dup_multimodal_clusters``: union of the text and image edge
-sets before a single connected-components pass — an image pair OR a
-caption pair links two rows (the reference-pipeline semantics from
-BASELINE.json north_star).
+``near_dup_multimodal_clusters``: union of the caption-MinHash and the
+image phash / pixel-SimHash (Hamming-LSH) edge sets before a single
+connected-components pass — an image pair OR a caption pair links two
+rows (the reference-pipeline semantics from BASELINE.json north_star).
+``near_dup_multimodal_clusters_from_path`` is the same pipeline over a
+direct-read signature frame, with fused multi-family banding.
 
 Plan shape (what ``.explain`` should show at every scale):
 
@@ -20,7 +19,8 @@ Plan shape (what ``.explain`` should show at every scale):
   → hash agg by (band_id, band_key) + pair emit     [shuffle 1]
   → hash agg distinct pairs                         [shuffle 2]
   → join pairs×signatures ×2 (verification)         [shuffle 3, 4]
-  → CC iterations (join + min-agg per round)        [1 shuffle/round]
+  → connected components: driver path, one-task
+    finish, or contraction rounds                   [2 shuffles/round]
 
 The signature frame is checkpointed before fan-out so banding and the
 two verification joins share one computed lineage (signatures are the
@@ -354,8 +354,9 @@ def multimodal_verified_edges_from_path(
     # (equivalence-tested against the DataFrame-API pipeline in
     # tests/test_entry_queries.py).
     narrow = sigs_all.select("image_id", "phash", "pixel_simhash", "decode_ok")
-    n_rows = sigs_all.count()
-    if n_rows <= cfg.broadcast_verify_max_rows:  # ≈50 MB narrow hash table at 2M
+    # the count is a Spark job of its own: pay it only when the gate
+    # can fire (≈50 MB narrow hash table at 2M)
+    if cfg.broadcast_verify_max_rows and sigs_all.count() <= cfg.broadcast_verify_max_rows:
         narrow = F.broadcast(narrow)
     na = narrow.select(
         F.col("image_id").alias("a"),

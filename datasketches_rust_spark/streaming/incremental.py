@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -112,10 +113,16 @@ class IncrementalNearDup:
         return os.path.join(self.state_dir, "clusters")
 
     def _existing_signatures(self, spark: SparkSession) -> DataFrame | None:
+        """The signature state, or None before the first micro-batch.
+        Only a missing path means "no state": any other read failure
+        raises, because reading it as empty would restart the state
+        from nothing and re-emit every row."""
         try:
             return spark.read.parquet(self.sig_path)
-        except Exception:
-            return None
+        except AnalysisException as e:
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return None
+            raise
 
     def process_batch(self, batch_df: DataFrame, _batch_id: int = 0) -> None:
         """One micro-batch: new-row signatures → append to state →

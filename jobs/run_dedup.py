@@ -42,7 +42,7 @@ def main() -> None:
                     help="disable the sandbox-scale driver shortcuts "
                          "(broadcast verify side, driver-side CC) and run "
                          "the plan a large cluster runs: shuffle-join "
-                         "verification + distributed pointer-jump CC. "
+                         "verification + distributed contraction CC. "
                          "Output is identical (equivalence-tested); near "
                          "the ~1M-row crossover the shortcuts' serial "
                          "cost dominates a two-cluster-size scaling "

@@ -143,7 +143,7 @@ def test_from_path_pipeline_matches_dataframe_pipeline(spark, tmp_path):
 def test_at_scale_plan_matches_default_plan(spark, tmp_path):
     """cc_driver_max_edges=0 + broadcast_verify_max_rows=0 (the
     run_dedup.py --at-scale-plan config: shuffle-join verification +
-    distributed pointer-jump CC — the plan a large cluster runs) must
+    distributed contraction CC — the plan a large cluster runs) must
     yield identical cluster assignments to the default sandbox-scale
     shortcuts (broadcast verify side + driver-side CC)."""
     from dataclasses import replace

@@ -70,15 +70,22 @@ def test_planted_truth_quality(spark_table, table):
 
 def test_cc_driver_path_equals_distributed(spark):
     """The selectivity-gated driver NumPy path must produce exactly the
-    distributed loop's labeling (min id per component) — on chains,
-    triangles, isolated pairs, for long AND string vertex ids."""
+    distributed path's labeling (min id per component) — on chains,
+    triangles, isolated pairs, a self-loop, duplicate and mirrored
+    edges, for long AND string vertex ids — both when the edges fit the
+    one-task finish and when a 32-byte advisory partition size forces
+    contraction rounds."""
+    from contextlib import nullcontext
+
     import pandas as pd
 
     from datasketches_rust_spark.operators.connected_components import (
+        advisory_partition_size,
         connected_components,
     )
 
-    edges = [(0, 1), (1, 2), (2, 3), (10, 11), (11, 12), (10, 12), (20, 21)]
+    edges = [(0, 1), (1, 2), (2, 3), (10, 11), (11, 12), (10, 12), (20, 21),
+             (21, 20), (20, 21), (30, 30)]
     for typ, conv in (("long", int), ("string", lambda v: f"v{v:03d}")):
         df = spark.createDataFrame(
             [(conv(a), conv(b)) for a, b in edges], f"a {typ}, b {typ}"
@@ -86,15 +93,22 @@ def test_cc_driver_path_equals_distributed(spark):
         via_driver = (
             connected_components(df).toPandas().sort_values("id").reset_index(drop=True)
         )
-        via_loop = (
-            connected_components(df, driver_max_edges=0)
-            .toPandas()
-            .sort_values("id")
-            .reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(via_driver, via_loop)
-        want_clusters = {conv(0): [0, 1, 2, 3], conv(10): [10, 11, 12], conv(20): [20, 21]}
+        for size, min_rounds in ((None, 0), ("32b", 1)):
+            stats: dict = {}
+            with advisory_partition_size(spark, size) if size else nullcontext():
+                via_loop = (
+                    connected_components(df, driver_max_edges=0, stats=stats)
+                    .toPandas()
+                    .sort_values("id")
+                    .reset_index(drop=True)
+                )
+            assert stats["rounds"] >= min_rounds, stats
+            pd.testing.assert_frame_equal(via_driver, via_loop)
+        want_clusters = {
+            conv(0): [0, 1, 2, 3], conv(10): [10, 11, 12], conv(20): [20, 21], conv(30): [30]
+        }
         got = dict(zip(via_driver["id"], via_driver["cluster_id"]))
+        assert len(got) == 10
         for root, members in want_clusters.items():
             for m in members:
                 assert got[conv(m)] == root

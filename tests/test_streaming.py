@@ -51,6 +51,21 @@ def test_incremental_stream_matches_batch(spark, tmp_path):
     assert (got["cluster_id"] == want["cluster_id"]).all()
 
 
+
+def test_incremental_unreadable_state_raises(spark, tmp_path):
+    """A signature state that exists but cannot be read must fail the
+    micro-batch, not read as "no state yet" (which would restart the
+    state from nothing and re-emit every row)."""
+    inc = IncrementalNearDup(str(tmp_path / "state"))
+    os.makedirs(inc.sig_path)
+    with open(os.path.join(inc.sig_path, "part-00000.parquet"), "wb") as fh:
+        fh.write(b"not a parquet file")
+    batch = generate_image_caption_df(spark, 8, seed=5, partitions=1)
+    with pytest.raises(Exception) as info:
+        inc.process_batch(batch)
+    assert "PATH_NOT_FOUND" not in str(info.value)
+    assert not os.path.exists(inc.edges_path)
+
 def test_streaming_signatures_stateless(spark, tmp_path):
     full = generate_image_caption_df(spark, 40, seed=3, partitions=2)
     src = str(tmp_path / "sig_src")

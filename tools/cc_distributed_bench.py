@@ -2,16 +2,19 @@
 multimodal edge set — the number VERDICT r4 flagged as extrapolated.
 
 At sandbox scale the edge-count gate (driver_max_edges) routes every
-query to the driver NumPy path, so the distributed pointer-jump loop
-was equivalence-tested but never *measured* on production edges. This
+query to the driver NumPy path, so the distributed path was
+equivalence-tested but never *measured* on production edges. This
 tool runs the full from_path pipeline's verified-edge stage over the
 deterministic bench image table (bench._gen_image_input), then drives
 ``connected_components`` twice on those edges — forced-distributed
 (driver_max_edges=0) and driver path — recording for each: wall
-seconds, loop rounds, undirected edge / vertex / cluster counts, and
-the shuffle read+write bytes of the distributed window (from the
-Spark UI REST API, enabled just for this tool). Both label sets are
-asserted identical before anything is printed.
+seconds; for the distributed path its contraction rounds and the
+active-edge count after each (``active_edges``: the raw canonical
+count first; rounds 0 means the one-task finish solved it);
+undirected edge / vertex / cluster counts, and the shuffle read+write
+bytes of the distributed window (from the Spark UI REST API, enabled
+just for this tool). Both label sets are asserted identical before
+anything is printed.
 
 Weather: absolute seconds carry the standard probe stamps; the
 distributed/driver RATIO and the per-round decomposition are the
@@ -135,6 +138,7 @@ def main() -> int:
         "distributed": {
             "sec": round(dist_sec, 2),
             "rounds": rounds,
+            "active_edges": dstats.get("active_edges"),
             "sec_per_round": round(dist_sec / max(1, rounds), 2),
             "shuffle_read_mb": round((rd1 - rd0) / 1e6, 1),
             "shuffle_write_mb": round((wr1 - wr0) / 1e6, 1),
