@@ -728,7 +728,9 @@ def _q_multimodal_clusters_direct(spark: SparkSession, sf_dir: str) -> DataFrame
     400-image fixture, but consumed via the direct-read scale path —
     `signatures_direct` streams the parquet row groups inside the
     Python workers (pyarrow; pixels never transit the JVM, object-store
-    URIs and row-group splits supported), then the identical fused-LSH
+    URIs supported; tasks and byte-range splits planned by Spark's own
+    file-scan rule, each task reading the row groups whose midpoint
+    lies in its ranges), then the identical fused-LSH
     / verify / CC plan. Clusters must equal the JVM-read flagship's
     row for row, so this shares `_MULTIMODAL_CLUSTERS_SQL` — a value
     regression in the listing, split planner, streamed read, or

@@ -59,12 +59,13 @@ from __future__ import annotations
 
 import logging
 import math
-from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import conf_bytes, scoped_conf
 
 _log = logging.getLogger(__name__)
 
@@ -236,11 +237,7 @@ def _partition_plan(edges: DataFrame) -> tuple[int, int]:
     """(advisory partition bytes, estimated bytes per edge row): the
     size Spark's AQE packs post-shuffle partitions to, and Spark's own
     per-row size estimate for the edge schema."""
-    spark = edges.sparkSession
-    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get(ADVISORY_SIZE)
-    )
-    return advisory, 8 + edges._jdf.schema().defaultSize()
+    return conf_bytes(edges.sparkSession, ADVISORY_SIZE), 8 + edges._jdf.schema().defaultSize()
 
 
 def _contraction_round(active: DataFrame, n_parts: int, id_type: str) -> DataFrame:
@@ -354,19 +351,6 @@ def connected_components(
     return labels
 
 
-@contextmanager
-def advisory_partition_size(spark, size: str):
-    """Set ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` for the
-    block and restore it afterwards. A small size makes a small edge
-    set take the contraction rounds instead of the one-task finish."""
-    old = spark.conf.get(ADVISORY_SIZE)
-    spark.conf.set(ADVISORY_SIZE, size)
-    try:
-        yield
-    finally:
-        spark.conf.set(ADVISORY_SIZE, old)
-
-
 def distributed_loop_selfcheck(spark) -> bool:
     """Deterministic boolean gate for the DISTRIBUTED contraction
     rounds, designed to ride a green sweep row (the round-4/5 folding
@@ -408,7 +392,7 @@ def distributed_loop_selfcheck(spark) -> bool:
         + [(401, 401), (403, 401), (402, 402), (404, 402), (500, 500)]
     )
     dstats: dict = {}
-    with advisory_partition_size(spark, "192b"):
+    with scoped_conf(spark, {ADVISORY_SIZE: "192b"}):
         dist = connected_components(edges, "a", "b", driver_max_edges=0, stats=dstats)
         dist_rows = sorted((r["id"], r["cluster_id"]) for r in dist.collect())
     return dist_rows == sorted(expected) and dstats.get("rounds", 0) >= 3

@@ -21,6 +21,7 @@ from pyspark.sql.functions import pandas_udf
 from ..config import MinHashConfig, SimHashConfig
 from ..functions.minhash import band_hashes, minhash_signatures
 from ..functions.simhash import simhash_tokens
+from ..session import conf_bytes
 
 # int64 view of the all-ones empty-signature sentinel (uint64 max)
 EMPTY_SLOT_I64 = -1
@@ -74,7 +75,7 @@ def jaccard_from_signatures(sig_a: str, sig_b: str) -> Column:
 
 
 def _resolve_direct_files(parquet_path: str):
-    """Resolve (filesystem, file list) for the direct-read path.
+    """Resolve (filesystem, [(file, size in bytes)]) for the direct read.
 
     Plain local paths keep the zero-dependency glob fast path (workers
     open plain paths; no filesystem object is shipped). Paths with a
@@ -83,7 +84,9 @@ def _resolve_direct_files(parquet_path: str):
     filesystem handle is returned and pickled into the worker closure
     (pyarrow filesystems pickle by construction), so driver listing
     and worker opens go through the same storage backend — no shared
-    POSIX view required.
+    POSIX view required. Sizes come from the listing (a ``stat`` or
+    the object store's file info); the driver opens no file, so it
+    reads no parquet footer.
     """
     import glob as _glob
     import os as _os
@@ -93,55 +96,84 @@ def _resolve_direct_files(parquet_path: str):
             _glob.glob(_os.path.join(parquet_path, "*.parquet"))
             or _glob.glob(_os.path.join(parquet_path, "part-*"))
         )
-        return None, files
+        return None, [(f, _os.path.getsize(f)) for f in files]
 
     from pyarrow import fs as pafs
 
     filesystem, base = pafs.FileSystem.from_uri(parquet_path)
     infos = filesystem.get_file_info(pafs.FileSelector(base, recursive=False))
-    names = [
-        i.path
+    sized = [
+        (i.path, i.size)
         for i in infos
         if i.is_file
         and (i.base_name.endswith(".parquet") or i.base_name.startswith("part-"))
         and not i.base_name.startswith(("_", "."))
     ]
-    return filesystem, sorted(names)
+    return filesystem, sorted(sized)
 
 
-def _row_group_splits(
-    files: list[str], filesystem, default_parallelism: int
-) -> list[tuple[str, int, int]]:
-    """Plan splits for the direct read: ``(path, rg_lo, rg_hi)``.
+def _file_scan_bins(spark, sized_files) -> list[list[tuple[str, int, int]]]:
+    """Spark's file-scan split plan for ``[(file, size)]``: one list of
+    ``(file, start, length)`` byte ranges per task.
 
-    ``rg_lo == -1`` means "whole file, no footer read" — the default
-    when there are already enough files to occupy the cluster
-    (file count ≥ 2× default parallelism), so the common many-files
-    layout pays zero extra driver I/O. Below that, a consolidated
-    few-huge-files layout would strand most cores on per-file tasks,
-    so each footer is read once driver-side (cheap exactly when there
-    are few files) and files split into contiguous row-group ranges
-    targeting ~2 tasks per core in total.
+    The rule of ``FilePartition`` in Spark SQL, from Spark's existing
+    settings: the split size is ``min(maxPartitionBytes, max(
+    openCostInBytes, total / minPartitionNum))``, where ``total`` sums
+    every file's size plus the open cost and ``minPartitionNum``
+    defaults to the leaf-node (default) parallelism. Files cut into
+    split-size ranges; the ranges, largest first, fill tasks in order
+    and a task closes when the next range would take it past the split
+    size (each range also counts the open cost). So the task count
+    equals ``spark.read.parquet(path).rdd.getNumPartitions()`` on the
+    same files, and zero-byte files get no range.
     """
-    import pyarrow.parquet as pq
+    conf = spark.conf
+    max_bytes = conf_bytes(spark, "spark.sql.files.maxPartitionBytes")
+    open_cost = conf_bytes(spark, "spark.sql.files.openCostInBytes")
+    min_parts = int(
+        conf.get("spark.sql.files.minPartitionNum", None)
+        or conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
+    total = sum(size + open_cost for _, size in sized_files)
+    split = min(max_bytes, max(open_cost, total // min_parts))
+    ranges = [
+        (f, start, min(split, size - start))
+        for f, size in sized_files
+        for start in range(0, size, split)
+    ]
+    ranges.sort(key=lambda r: -r[2])  # stable: listing order breaks ties
+    bins: list[list[tuple[str, int, int]]] = []
+    current: list[tuple[str, int, int]] = []
+    used = 0
+    for r in ranges:
+        if current and used + r[2] > split:
+            bins.append(current)
+            current, used = [], 0
+        current.append(r)
+        used += r[2] + open_cost
+    if current:
+        bins.append(current)
+    return bins
 
-    target = max(2 * default_parallelism, 1)
-    if len(files) >= target:
-        return [(f, -1, -1) for f in files]
-    per_file = -(-target // len(files))  # ceil: chunks wanted per file
-    splits: list[tuple[str, int, int]] = []
-    for f in files:
-        source = filesystem.open_input_file(f) if filesystem else f
-        n = pq.ParquetFile(source).metadata.num_row_groups
-        k = min(max(n, 1), per_file)
-        # contiguous ranges, sizes differing by at most one row group
-        bounds = [round(i * n / k) for i in range(k + 1)]
-        splits.extend(
-            (f, lo, hi) for lo, hi in zip(bounds, bounds[1:]) if hi > lo
-        )
-        if n == 0:
-            splits.append((f, 0, 0))  # keep empty files harmless
-    return splits
+
+def _row_groups_in_range(metadata, start: int, length: int) -> list[int]:
+    """Row groups of a parquet file that the byte range ``[start, start
+    + length)`` reads: those whose midpoint falls inside it, parquet-mr's
+    rule. A row group starts at its first column chunk's first page
+    (dictionary or data) and spans its chunks' compressed sizes, so the
+    ranges that tile a file read each row group exactly once."""
+    picked = []
+    for i in range(metadata.num_row_groups):
+        rg = metadata.row_group(i)
+        first = rg.column(0)
+        offset = first.data_page_offset
+        if first.has_dictionary_page:
+            offset = min(offset, first.dictionary_page_offset)
+        size = sum(rg.column(c).total_compressed_size for c in range(rg.num_columns))
+        if start <= offset + size // 2 < start + length:
+            picked.append(i)
+    return picked
 
 
 def signatures_direct(
@@ -186,25 +218,26 @@ def signatures_direct(
     unchanged by the chunking (every kernel is per-row deterministic;
     equivalence-tested against the JVM-read pipeline).
 
-    Split granularity: one task per file by default; when the file
-    count is below 2× default parallelism (a consolidated few-huge-
-    files layout, where per-file tasks would idle most of the
-    cluster), each file's footer is read once driver-side and the plan
-    splits files into contiguous ROW-GROUP ranges instead — the footer
-    reads are only paid exactly when there are few files to read.
+    Task plan: the splits and their count are the ones Spark's own
+    parquet scan plans for the same files (`_file_scan_bins`, driven by
+    ``spark.sql.files.maxPartitionBytes``, ``openCostInBytes`` and
+    ``minPartitionNum``): small files pack into tasks of about
+    ``total bytes / minPartitionNum`` (one wave, one task per core by
+    default), and a file larger than the split size is cut into byte
+    ranges, each task reading the row groups whose midpoint falls in its
+    ranges (`_row_groups_in_range`, evaluated on the worker). The driver
+    lists file sizes and reads no footers. The task frame is generated on
+    the JVM (``spark.range``, one row ``id = task`` per partition; each
+    task looks its ranges up in the closure), so each task launches
+    exactly one Python worker (session.py's module notes give the
+    measured per-task cost).
     """
     mh = minhash_cfg or MinHashConfig()
     sh = simhash_cfg or SimHashConfig()
-    filesystem, files = _resolve_direct_files(parquet_path)
-    if not files:
+    filesystem, sized_files = _resolve_direct_files(parquet_path)
+    if not sized_files:
         raise ValueError(f"no parquet files under {parquet_path}")
-    splits = _row_group_splits(
-        files, filesystem, spark.sparkContext.defaultParallelism
-    )
-    plan = spark.createDataFrame(
-        spark.sparkContext.parallelize(splits, len(splits)),
-        "path string, rg_lo int, rg_hi int",
-    )
+    bins = _file_scan_bins(spark, sized_files)
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow.parquet as pq
@@ -219,14 +252,10 @@ def signatures_direct(
 
         cols = ["image_id", "bytes", "fmt", "caption", "phash"]
         for pdf in batches:
-            for path, rg_lo, rg_hi in zip(pdf["path"], pdf["rg_lo"], pdf["rg_hi"]):
+            for path, start, length in (r for t in pdf["id"] for r in bins[t]):
                 source = filesystem.open_input_file(path) if filesystem else path
                 reader = pq.ParquetFile(source)
-                row_groups = (
-                    list(range(rg_lo, rg_hi))
-                    if rg_lo >= 0
-                    else list(range(reader.metadata.num_row_groups))
-                )
+                row_groups = _row_groups_in_range(reader.metadata, start, length)
                 if not row_groups:
                     continue
                 for tbl in reader.iter_batches(
@@ -282,4 +311,4 @@ def signatures_direct(
         "image_id string, phash long, phash_computed long, pixel_simhash long, "
         "decode_ok boolean, signature array<long>, bands array<long>"
     )
-    return plan.mapInPandas(compute, schema)
+    return spark.range(len(bins), numPartitions=len(bins)).mapInPandas(compute, schema)

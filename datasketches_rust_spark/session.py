@@ -17,9 +17,26 @@ generated image+caption table, see BASELINE.md bench protocol):
   16 KB ≈ 160 MB per batch per worker).
 * AQE on (coalescing + skew-join splitting are the north rule's
   "AQE-driven skew mitigation").
+
+Cost of a Python task. Every Spark task that runs Python (a pandas UDF,
+``mapInPandas``, or a Python RDD feeding either) sets up its worker with
+``importlib.invalidate_caches()``. Under CPython 3.11 that re-reads the
+central directory of every zip on the worker's ``sys.path``; with a
+Spark distribution's ``pyspark.zip`` and ``spark-core`` jar there, that
+is 16 zipimporters and about 26,700 entries. Measured on a 4-core host
+(CPython 3.11.7, Spark 4.1.2): 0.25–0.39 s per task, about 250 ms for a
+no-op task on an idle ``local[1]``. A plan pays this once per Python
+task, so the engine's own Python task plans (the direct-read signature
+stage, the generators) run on task frames generated on the JVM
+(``spark.range(n, numPartitions=n)``, one row per task; a Python RDD
+would add a second Python worker per task), and the signature stage launches no more tasks than Spark's own
+file scan would plan for the same input.
 """
 
 from __future__ import annotations
+
+import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -35,6 +52,44 @@ def apply_engine_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
     for k, v in ENGINE_CONF.items():
         builder = builder.config(k, v)
     return builder
+
+
+def conf_bytes(spark: SparkSession, key: str) -> int:
+    """A byte-size Spark setting (``"128MB"``, ``"4194304b"``, ...) in
+    bytes, parsed the way Spark parses it."""
+    return spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get(key)
+    )
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, settings: dict[str, str]):
+    """Set the Spark SQL ``settings`` (key → value) for the block, then
+    restore each key's previous value; a key that was unset is unset
+    again."""
+    old = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def default_driver_memory() -> str:
+    """Half of the host's available memory (``MemAvailable``), at least
+    1 GB. In local mode the driver JVM also runs the executors; the
+    other half is left to the Python workers and the OS."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemAvailable:"))
+    except (OSError, StopIteration):
+        return "4g"
+    return f"{max(kb // 2 // 1024, 1024)}m"
 
 
 def ensure_min_partitions(df, target: int | None = None):
@@ -71,7 +126,7 @@ def make_local_session(
     cpus: int,
     shuffle_partitions: int | None = None,
     app_name: str = "datasketches-rust-spark",
-    driver_memory: str = "16g",
+    driver_memory: str | None = None,
     default_parallelism: int | None = None,
 ) -> SparkSession:
     """``default_parallelism`` is AQE's coalescing target: post-shuffle
@@ -84,13 +139,15 @@ def make_local_session(
     not a universal win: the same setting measured 22% SLOWER on a
     10-query sf0.1 headline subset at 32 cores (small inputs, task
     overhead dominates), so the default stays Spark's cores=bins and
-    only large-input callers (bench.py scaling runs) opt in."""
+    only large-input callers (bench.py scaling runs) opt in.
+
+    ``driver_memory`` defaults to :func:`default_driver_memory`."""
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus * 2))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", driver_memory)
+        .config("spark.driver.memory", driver_memory or default_driver_memory())
     )
     if default_parallelism:
         builder = builder.config("spark.default.parallelism", str(default_parallelism))
@@ -100,10 +157,9 @@ def make_local_session(
     # shuffle-heavy stages up to 2× while CPU-bound stages were
     # unaffected. Shuffle data at sandbox scale is MBs–GBs vs 126 GB
     # of tmpfs; on a real cluster local dirs are NVMe-backed and this
-    # env-dependent default simply doesn't fire.
-    import os
-
-    if os.path.isdir("/dev/shm"):
+    # env-dependent default simply doesn't fire. ``SPARK_LOCAL_DIRS``
+    # opts out: Spark uses those dirs and nothing is created here.
+    if "SPARK_LOCAL_DIRS" not in os.environ and os.path.isdir("/dev/shm"):
         shm_dir = "/dev/shm/spark-local"
         os.makedirs(shm_dir, exist_ok=True)
         builder = builder.config("spark.local.dir", shm_dir)

@@ -36,6 +36,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
+
 
 @dataclass
 class CheckpointManager:
@@ -156,12 +158,8 @@ class CheckpointManager:
             # dynamic partition overwrite: a run killed mid-write leaves
             # partial bucket dirs; re-running replaces exactly the
             # recomputed buckets → resume is idempotent
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
+            with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
                 result.write.mode("overwrite").partitionBy("_bucket").parquet(out_path)
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             schema_json = result.schema.json()
             rows_written = (
                 spark.read.schema(result.schema)

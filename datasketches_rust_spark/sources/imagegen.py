@@ -122,6 +122,13 @@ def generate_image_caption_table(n_rows: int, seed: int = 42) -> GeneratedTable:
     return GeneratedTable(rows, pd.DataFrame.from_records(truth))
 
 
+def even_slice(total: int, parts: int, p: int) -> tuple[int, int]:
+    """``(start, count)`` of slice ``p`` when ``total`` items split into
+    ``parts`` contiguous slices whose sizes differ by at most one."""
+    base, extra = divmod(total, parts)
+    return p * base + min(p, extra), base + (1 if p < extra else 0)
+
+
 def generate_image_caption_df(
     spark,
     n_rows: int,
@@ -140,36 +147,21 @@ def generate_image_caption_df(
     ``with_truth`` appends a ``true_cluster`` string column (drop it to
     get the exact input_hint schema).
     """
-    sc = spark.sparkContext
-    partitions = partitions or sc.defaultParallelism
+    partitions = partitions or spark.sparkContext.defaultParallelism
     partitions = min(partitions, n_rows) or 1
-    base = n_rows // partitions
-    extra = n_rows % partitions
-    slices = []
-    start = 0
-    for p in range(partitions):
-        cnt = base + (1 if p < extra else 0)
-        slices.append((p, start, cnt))
-        start += cnt
-
-    # exactly one slice per partition (hash-repartition would collide
-    # slices into some partitions and leave others empty → skewed files)
-    plan = spark.createDataFrame(
-        spark.sparkContext.parallelize(slices, partitions), "p int, start long, cnt int"
-    )
 
     def gen(batches):
         for pdf in batches:
-            for p, off, cnt in zip(pdf["p"], pdf["start"], pdf["cnt"]):
+            for p in map(int, pdf["id"]):
+                off, cnt = even_slice(n_rows, partitions, p)
                 if cnt == 0:
                     continue
-                tbl = generate_image_caption_table(int(cnt), seed=seed + 1_000_003 * int(p))
+                tbl = generate_image_caption_table(cnt, seed=seed + 1_000_003 * p)
                 rows = tbl.rows.copy()
-                local_idx = np.arange(int(cnt))
-                rows["image_id"] = [f"img_{int(off) + i:012d}" for i in local_idx]
+                rows["image_id"] = [f"img_{off + i:012d}" for i in range(cnt)]
                 if with_truth:
                     cl = tbl.truth["true_cluster"].to_numpy()
-                    rows["true_cluster"] = [f"c_{int(p)}_{int(c)}" for c in cl]
+                    rows["true_cluster"] = [f"c_{p}_{int(c)}" for c in cl]
                 yield rows
 
     schema = (
@@ -178,7 +170,10 @@ def generate_image_caption_df(
     )
     if with_truth:
         schema += ", true_cluster string"
-    return plan.mapInPandas(gen, schema)
+    # exactly one slice per partition (hash-repartition would collide
+    # slices into some partitions and leave others empty → skewed
+    # files), on a JVM-generated frame: partition p holds the row id = p
+    return spark.range(partitions, numPartitions=partitions).mapInPandas(gen, schema)
 
 
 def true_dup_pairs(truth: pd.DataFrame) -> set[tuple[str, str]]:

@@ -25,6 +25,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from .imagegen import even_slice
+
 AUDIO_SAMPLE_RATE = 16_000
 VIDEO_W = VIDEO_H = 16
 
@@ -61,17 +63,23 @@ def _video_pair_payload(j: int, seed: int) -> tuple[bytes, int]:
     return frames.tobytes(), nf
 
 
-def _pair_slices(spark: SparkSession, n_pairs: int, partitions: int) -> DataFrame:
+def _pair_rows(
+    spark: SparkSession, n_pairs: int, partitions: int, pair_rows, schema: str
+) -> DataFrame:
+    """The rows ``pair_rows(j)`` for every pair ``j``, generated
+    executor-side: partition ``p`` of a JVM-generated frame holds the
+    row ``id = p`` and emits one contiguous slice of the pairs."""
     partitions = max(1, min(partitions, n_pairs))
-    base, extra = divmod(n_pairs, partitions)
-    slices, start = [], 0
-    for p in range(partitions):
-        cnt = base + (1 if p < extra else 0)
-        slices.append((start, cnt))
-        start += cnt
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(slices, partitions), "start long, cnt int"
-    )
+
+    def gen(batches):
+        for pdf in batches:
+            for p in map(int, pdf["id"]):
+                start, cnt = even_slice(n_pairs, partitions, p)
+                rows = [r for j in range(start, start + cnt) for r in pair_rows(j)]
+                if rows:
+                    yield pd.DataFrame.from_records(rows)
+
+    return spark.range(partitions, numPartitions=partitions).mapInPandas(gen, schema)
 
 
 def generate_audio_df(
@@ -81,27 +89,22 @@ def generate_audio_df(
     must be even (rows pair up as planted exact duplicates)."""
     assert n_rows % 2 == 0, "n_rows must be even (planted dup pairs)"
 
-    def gen(batches):
-        for pdf in batches:
-            for start, cnt in zip(pdf["start"], pdf["cnt"]):
-                rows = []
-                for j in range(int(start), int(start) + int(cnt)):
-                    data, nch = _audio_pair_payload(j, seed)
-                    for i in (2 * j, 2 * j + 1):
-                        rows.append(
-                            {
-                                "audio_id": f"aud_{i:08d}",
-                                "bytes": data,
-                                "sample_rate": AUDIO_SAMPLE_RATE,
-                                "n_channels": nch,
-                                "fmt": "pcm16",
-                            }
-                        )
-                if rows:
-                    yield pd.DataFrame.from_records(rows)
+    def pair_rows(j):
+        data, nch = _audio_pair_payload(j, seed)
+        return [
+            {
+                "audio_id": f"aud_{i:08d}",
+                "bytes": data,
+                "sample_rate": AUDIO_SAMPLE_RATE,
+                "n_channels": nch,
+                "fmt": "pcm16",
+            }
+            for i in (2 * j, 2 * j + 1)
+        ]
 
-    return _pair_slices(spark, n_rows // 2, partitions).mapInPandas(
-        gen, "audio_id string, bytes binary, sample_rate int, n_channels int, fmt string"
+    return _pair_rows(
+        spark, n_rows // 2, partitions, pair_rows,
+        "audio_id string, bytes binary, sample_rate int, n_channels int, fmt string",
     )
 
 
@@ -112,26 +115,21 @@ def generate_video_df(
     (rows pair up as planted exact duplicates)."""
     assert n_rows % 2 == 0, "n_rows must be even (planted dup pairs)"
 
-    def gen(batches):
-        for pdf in batches:
-            for start, cnt in zip(pdf["start"], pdf["cnt"]):
-                rows = []
-                for j in range(int(start), int(start) + int(cnt)):
-                    data, nf = _video_pair_payload(j, seed)
-                    for i in (2 * j, 2 * j + 1):
-                        rows.append(
-                            {
-                                "video_id": f"vid_{i:08d}",
-                                "bytes": data,
-                                "w": VIDEO_W,
-                                "h": VIDEO_H,
-                                "n_frames": nf,
-                                "fmt": "rawrgb",
-                            }
-                        )
-                if rows:
-                    yield pd.DataFrame.from_records(rows)
+    def pair_rows(j):
+        data, nf = _video_pair_payload(j, seed)
+        return [
+            {
+                "video_id": f"vid_{i:08d}",
+                "bytes": data,
+                "w": VIDEO_W,
+                "h": VIDEO_H,
+                "n_frames": nf,
+                "fmt": "rawrgb",
+            }
+            for i in (2 * j, 2 * j + 1)
+        ]
 
-    return _pair_slices(spark, n_rows // 2, partitions).mapInPandas(
-        gen, "video_id string, bytes binary, w int, h int, n_frames int, fmt string"
+    return _pair_rows(
+        spark, n_rows // 2, partitions, pair_rows,
+        "video_id string, bytes binary, w int, h int, n_frames int, fmt string",
     )

@@ -13,7 +13,6 @@ winnowing + LCS substring matcher oracle-checkable end to end.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 _VOCAB = [f"w{i:03d}" for i in range(500)]
@@ -43,19 +42,10 @@ def generate_planted_substring_df(
 ) -> DataFrame:
     """(doc_id long, text string) — ``n_rows`` must be even."""
     assert n_rows % 2 == 0, "n_rows must be even (planted pairs)"
-    from .mediagen import _pair_slices
+    from .mediagen import _pair_rows
 
-    plan = _pair_slices(spark, n_rows // 2, partitions)
+    def pair_rows(j):
+        a, b = _pair_docs(j, seed)
+        return [{"doc_id": 2 * j, "text": a}, {"doc_id": 2 * j + 1, "text": b}]
 
-    def gen(batches):
-        for pdf in batches:
-            for s, cnt in zip(pdf["start"], pdf["cnt"]):
-                rows = []
-                for j in range(int(s), int(s) + int(cnt)):
-                    a, b = _pair_docs(j, seed)
-                    rows.append({"doc_id": 2 * j, "text": a})
-                    rows.append({"doc_id": 2 * j + 1, "text": b})
-                if rows:
-                    yield pd.DataFrame.from_records(rows)
-
-    return plan.mapInPandas(gen, "doc_id long, text string")
+    return _pair_rows(spark, n_rows // 2, partitions, pair_rows, "doc_id long, text string")

@@ -13,6 +13,7 @@ import math
 import numpy as np
 
 from datasketches_rust_spark.operators import connected_components as cc
+from datasketches_rust_spark.session import scoped_conf
 
 # about 170 long edges per partition
 SMALL_ADVISORY = "4k"
@@ -26,7 +27,7 @@ def _both_paths(spark, edges, schema="a long, b long"):
     """(forced-distributed labels, driver labels, distributed stats)."""
     df = spark.createDataFrame(edges, schema)
     stats: dict = {}
-    with cc.advisory_partition_size(spark, SMALL_ADVISORY):
+    with scoped_conf(spark, {cc.ADVISORY_SIZE: SMALL_ADVISORY}):
         dist = _labels(cc.connected_components(df, driver_max_edges=0, stats=stats))
     driver = _labels(cc.connected_components(df, driver_max_edges=len(edges)))
     return dist, driver, stats

@@ -8,6 +8,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from datasketches_rust_spark.session import scoped_conf
 
 SF_DIR = "/root/testdata/sf0.001"
 EVENT_QUERIES = [
@@ -215,45 +216,121 @@ def test_signatures_direct_uri_and_chunked_read(spark, tmp_path):
         os.path.join(one, "part-0.parquet"),
         row_group_size=6,
     )
-    single = signatures_direct(spark, one)
+    # at the default split size the file is one task; a split size of a
+    # quarter of the file cuts it into byte ranges
+    size = os.path.getsize(os.path.join(one, "part-0.parquet"))
+    with scoped_conf(spark, _file_split(f"{size // 4}b", "0b")):
+        single = signatures_direct(spark, one)
     assert single.rdd.getNumPartitions() > 1
     assert rows(single) == base
 
 
-def test_row_group_splits_planner():
-    """Split planner unit cases: many files stay whole-file with no
-    footer reads (sentinel -1), few files split into contiguous
-    disjoint row-group ranges covering every group exactly once."""
+def _file_split(max_partition_bytes: str, open_cost: str) -> dict[str, str]:
+    """Spark's file-scan split settings, for ``scoped_conf``."""
+    return {
+        "spark.sql.files.maxPartitionBytes": max_partition_bytes,
+        "spark.sql.files.openCostInBytes": open_cost,
+    }
+
+
+def _write_row_groups(path: str, n_groups: int) -> None:
+    """A parquet file with exactly ``n_groups`` row groups of 4 rows of
+    incompressible payload (about 1 KB each)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(n_groups)
+    schema = pa.schema([("image_id", pa.string()), ("bytes", pa.binary())])
+    with pq.ParquetWriter(path, schema) as w:
+        for g in range(n_groups):
+            w.write_table(pa.table(
+                {"image_id": [f"{g}_{i}" for i in range(4)],
+                 "bytes": [rng.bytes(256) for _ in range(4)]},
+                schema=schema,
+            ))
+
+
+def test_row_group_splits_planner(spark, tmp_path):
+    """Split planner: Spark's file-scan rule over the listed file sizes,
+    then each task picks the row groups whose midpoint lies in its byte
+    ranges. On every layout and split size: the task count equals
+    Spark's own scan of the same files, each file's ranges tile it with
+    no overlap, every row group is read by exactly one task, an empty
+    (0-row-group) file is harmless, and the driver reads no footer."""
     from unittest import mock
 
-    from datasketches_rust_spark.operators.signatures import _row_group_splits
+    import pyarrow.parquet as pq
 
-    many = [f"/x/part-{i}" for i in range(64)]
-    assert _row_group_splits(many, None, 8) == [(f, -1, -1) for f in many]
+    from datasketches_rust_spark.operators.signatures import (
+        _file_scan_bins,
+        _resolve_direct_files,
+        _row_groups_in_range,
+    )
 
-    class _Meta:
-        def __init__(self, n):
-            self.num_row_groups = n
+    layouts = {"many": [1] * 64, "mixed": [5, 12, 1, 0], "one": [12]}
+    split_confs = [("128MB", "4MB"), ("3k", "1k"), ("1k", "0b")]
+    for name, groups in layouts.items():
+        d = tmp_path / name
+        d.mkdir()
+        for i, n in enumerate(groups):
+            _write_row_groups(str(d / f"part-{i:05d}.parquet"), n)
+        for max_bytes, open_cost in split_confs:
+            with scoped_conf(spark, _file_split(max_bytes, open_cost)):
+                with mock.patch(
+                    "pyarrow.parquet.ParquetFile",
+                    side_effect=AssertionError("footer read on the driver"),
+                ):
+                    _, sized = _resolve_direct_files(str(d))
+                    bins = _file_scan_bins(spark, sized)
+                assert len(bins) == spark.read.parquet(str(d)).rdd.getNumPartitions()
+            ranges, readers = {}, {}
+            for task, ranges_of_task in enumerate(bins):
+                for f, start, length in ranges_of_task:
+                    ranges.setdefault(f, []).append((start, length))
+                    meta = pq.ParquetFile(f).metadata
+                    for g in _row_groups_in_range(meta, start, length):
+                        readers.setdefault((f, g), []).append(task)
+            for f, size in sized:
+                rs = sorted(ranges[f])
+                assert rs[0][0] == 0 and sum(n for _, n in rs) == size
+                assert all(a + n == b for (a, n), (b, _) in zip(rs, rs[1:]))
+            want = {(f, g) for f, _ in sized for g in range(pq.ParquetFile(f).metadata.num_row_groups)}
+            assert set(readers) == want, (name, max_bytes)
+            assert all(len(tasks) == 1 for tasks in readers.values()), (name, max_bytes)
+            if name == "one" and max_bytes == "1k":
+                # a multi-row-group file is cut across several tasks
+                assert len({t[0] for t in readers.values()}) > 1
 
-    class _PF:
-        def __init__(self, src):
-            self.metadata = _Meta({"a": 5, "b": 12, "c": 1, "d": 0}[src[-1]])
 
-    with mock.patch("pyarrow.parquet.ParquetFile", _PF):
-        splits = _row_group_splits(["fa", "fb", "fc", "fd"], None, 8)
-    by_file = {}
-    for f, lo, hi in splits:
-        by_file.setdefault(f, []).append((lo, hi))
-    # every row group covered exactly once, in order, no overlap
-    for f, n in (("fa", 5), ("fb", 12), ("fc", 1)):
-        ranges = by_file[f]
-        assert ranges[0][0] == 0 and ranges[-1][1] == n
-        assert all(a[1] == b[0] for a, b in zip(ranges, ranges[1:]))
-        assert all(hi > lo for lo, hi in ranges)
-    # the 12-group file got more chunks than the 1-group file
-    assert len(by_file["fb"]) > len(by_file["fc"]) == 1
-    # empty file present but harmless
-    assert by_file["fd"] == [(0, 0)]
+def test_signatures_direct_launch_plan(spark, tmp_path):
+    """The signature stage launches one Python worker per task: its task
+    frame is generated on the JVM, so its lineage holds no PythonRDD
+    feeding the mapInPandas. And an 8-file input runs as many tasks as
+    Spark's own scan of those files plans (4 on the 4-core test session,
+    not one per file)."""
+    from datasketches_rust_spark.operators.signatures import signatures_direct
+    from datasketches_rust_spark.sources.imagegen import generate_image_caption_df
+
+    path = str(tmp_path / "imgs8")
+    generate_image_caption_df(spark, 80, seed=5, partitions=8).write.parquet(path)
+    df = signatures_direct(spark, path)
+    assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("signatures-launch-plan", "signature stage task count")
+    try:
+        assert len(df.collect()) == 80
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    tracker = sc.statusTracker()
+    tasks = sum(
+        tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup("signatures-launch-plan")
+        for stage in tracker.getJobInfo(job).stageIds
+    )
+    assert tasks == spark.read.parquet(path).rdd.getNumPartitions() < 8
 
 
 def test_sql_registry_theta(spark):

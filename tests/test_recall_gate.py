@@ -80,9 +80,10 @@ def test_cc_driver_path_equals_distributed(spark):
     import pandas as pd
 
     from datasketches_rust_spark.operators.connected_components import (
-        advisory_partition_size,
+        ADVISORY_SIZE,
         connected_components,
     )
+    from datasketches_rust_spark.session import scoped_conf
 
     edges = [(0, 1), (1, 2), (2, 3), (10, 11), (11, 12), (10, 12), (20, 21),
              (21, 20), (20, 21), (30, 30)]
@@ -95,7 +96,7 @@ def test_cc_driver_path_equals_distributed(spark):
         )
         for size, min_rounds in ((None, 0), ("32b", 1)):
             stats: dict = {}
-            with advisory_partition_size(spark, size) if size else nullcontext():
+            with scoped_conf(spark, {ADVISORY_SIZE: size}) if size else nullcontext():
                 via_loop = (
                     connected_components(df, driver_max_edges=0, stats=stats)
                     .toPandas()

@@ -179,3 +179,20 @@ def test_lcs_batch_matches_per_pair_and_oracle():
     # empty / degenerate inputs
     assert list(lcs_at_least_batch(["", "abc", None], ["x", "", "abc"], 2)) == [0, 0, 0]
     assert list(lcs_at_least_batch(["abcde"], ["xxabcdexx"], 5)) == [5]
+
+
+def test_planted_substring_generator(spark):
+    """The planted-substring corpus: doc ids 0..n-1, one contiguous slice
+    of pairs per partition, and every pair ``j`` sharing a substring of
+    at least ``planted_len_for_pair(j)`` characters."""
+    from datasketches_rust_spark.sources.textgen import (
+        generate_planted_substring_df,
+        planted_len_for_pair,
+    )
+
+    df = generate_planted_substring_df(spark, 14, seed=3, partitions=3)
+    slices = df.rdd.glom().map(lambda rows: [r.doc_id for r in rows]).collect()
+    assert slices == [list(range(0, 6)), list(range(6, 10)), list(range(10, 14))]
+    docs = dict(map(tuple, df.collect()))
+    for j in range(7):
+        assert longest_common_substring_len(docs[2 * j], docs[2 * j + 1]) >= planted_len_for_pair(j)

@@ -61,7 +61,7 @@ def main() -> int:
     from datasketches_rust_spark.operators.dedup import (
         multimodal_verified_edges_from_path,
     )
-    from datasketches_rust_spark.session import apply_engine_conf
+    from datasketches_rust_spark.session import apply_engine_conf, default_driver_memory
 
     path = bench._gen_image_input(args.rows)
     fault0, cpu0 = bench._host_fault_probe(), bench._host_cpu_probe()
@@ -72,9 +72,9 @@ def main() -> int:
         .config("spark.sql.shuffle.partitions", str(args.cpus * 2))
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", str(UI_PORT))
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", default_driver_memory())
     )
-    if os.path.isdir("/dev/shm"):
+    if "SPARK_LOCAL_DIRS" not in os.environ and os.path.isdir("/dev/shm"):
         os.makedirs("/dev/shm/spark-local", exist_ok=True)
         builder = builder.config("spark.local.dir", "/dev/shm/spark-local")
     spark = apply_engine_conf(builder).getOrCreate()

@@ -64,6 +64,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import bench  # noqa: E402  (probes + input generator, single source of truth)
+from datasketches_rust_spark.session import default_driver_memory  # noqa: E402
 
 
 def _find_spark_submit() -> str | None:
@@ -110,7 +111,7 @@ def _submit_run(
             "--conf", "spark.ui.enabled=false",
             "--conf", f"spark.sql.shuffle.partitions={8 * cpus}",
             "--conf", f"spark.default.parallelism={4 * cpus}",
-            "--conf", "spark.driver.memory=16g",
+            "--conf", f"spark.driver.memory={default_driver_memory()}",
     ]
     # same sandbox-only tmpfs shuffle routing as make_local_session:
     # this host's disk writeback degrades in phases (<8 MB/s measured,
@@ -118,7 +119,8 @@ def _submit_run(
     # level-independent — it read as ~15 s of fixed cost in the first
     # steady-state record. On a real cluster local dirs are NVMe-backed
     # and the cluster manager sets them (the WARN Spark prints here).
-    if os.path.isdir("/dev/shm"):
+    # ``SPARK_LOCAL_DIRS`` opts out, as in make_local_session.
+    if "SPARK_LOCAL_DIRS" not in os.environ and os.path.isdir("/dev/shm"):
         shm = "/dev/shm/spark-local"
         os.makedirs(shm, exist_ok=True)
         cmd += ["--conf", f"spark.local.dir={shm}"]
